@@ -294,6 +294,8 @@ def main(argv: list[str] | None = None) -> int:
 
         spark = get_spark("longqc-cli", cores=args.local_cores)
     else:
+        # stock Python daemon: under spark-submit the package is a --py-files
+        # zip, which executors only add to sys.path after the daemon starts
         spark = SparkSession.builder.appName("longqc-spark").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -114,11 +114,8 @@ def main(argv: list[str]) -> int:
 
     registry = list(entry._queries_raw().keys())
     oracled = set(entry.oracle_sql().keys())
-    window = compute_window(
-        registry,
-        oracled,
-        load_history(max_round=PINNED_THROUGH_ROUND if args.check else None),
-    )
+    history = load_history(max_round=PINNED_THROUGH_ROUND if args.check else None)
+    window = compute_window(registry, oracled, history)
 
     if args.check:
         pinned = list(entry._DRIVER_WINDOW_FIRST)
@@ -134,10 +131,9 @@ def main(argv: list[str]) -> int:
         print(f"window ok ({len(window)} names)")
         return 0
 
-    full_hist = load_history()
     for name in window:
         tag = "oracled" if name in oracled else "rows-only"
-        seen = "never-checked" if name not in full_hist else "anchor"
+        seen = "never-checked" if name not in history else "anchor"
         print(f'    "{name}",  # {tag}, {seen}')
     return 0
 
