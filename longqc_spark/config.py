@@ -1,8 +1,10 @@
 """Rule configuration for the web-text QC engine.
 
 Analog of LongQC's preset resolution (reference ``longQC.py:171-233``): one
-frozen config object binds every threshold used by both the Spark rule stage
-and the pure-pandas reference labeler, so the two sides can never drift.
+frozen config object binds every threshold, and one rule table (``RULES``)
+binds each keep/drop rule to its stat column, comparison and threshold field.
+The Spark rule stage and the pure-pandas reference labeler both evaluate that
+table through ``rule_failures``, so the two sides cannot drift.
 
 Thresholds follow the Gopher/C4 heuristic families named in BASELINE.json
 (doc length, mean word length, symbol/word ratio, repetition fractions,
@@ -11,7 +13,9 @@ language-ID, perplexity, toxicity).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+import operator
+from dataclasses import dataclass, replace
+from typing import Any, Callable
 
 
 # Deterministic stand-in toxicity lexicon (harmless sci-fi pseudo-profanity).
@@ -84,29 +88,6 @@ class QCConfig:
     fuzzy_max_dist: int = 1
     fuzzy_min_identity: float = 0.75
 
-    # Rule evaluation order — fixed so `reasons` arrays compare byte-identically.
-    rule_names: tuple[str, ...] = (
-        "too_few_words",
-        "too_many_words",
-        "mean_word_len_low",
-        "mean_word_len_high",
-        "symbol_ratio_high",
-        "alpha_char_frac_low",
-        "alpha_word_frac_low",
-        "too_few_stopwords",
-        "dup_line_frac_high",
-        "top_2gram_frac_high",
-        "top_3gram_frac_high",
-        "top_4gram_frac_high",
-        "bullet_line_frac_high",
-        "ellipsis_line_frac_high",
-        "has_braces",
-        "lang_not_allowed",
-        "lang_score_low",
-        "perplexity_high",
-        "toxicity",
-    )
-
     def with_overrides(self, **kw) -> "QCConfig":
         return replace(self, **kw)
 
@@ -123,3 +104,41 @@ DRIVER_DOCS_CONFIG = QCConfig(
     min_lang_score=0.15,
     max_perplexity=6500.0,
 )
+
+
+def _not_in(values, allowed):
+    return ~values.isin(list(allowed))
+
+
+# The keep/drop rules (decision-cascade analog, reference
+# ``longQC.py:787-824``): (rule name, stat column, comparison that is True
+# when the doc FAILS the rule, QCConfig threshold field). Row order is the
+# evaluation order, so ``reasons`` arrays compare byte-identically.
+RULES: tuple[tuple[str, str, Callable, str], ...] = (
+    ("too_few_words", "n_words", operator.lt, "min_words"),
+    ("too_many_words", "n_words", operator.gt, "max_words"),
+    ("mean_word_len_low", "mean_word_len", operator.lt, "min_mean_word_len"),
+    ("mean_word_len_high", "mean_word_len", operator.gt, "max_mean_word_len"),
+    ("symbol_ratio_high", "symbol_char_frac", operator.gt, "max_symbol_char_frac"),
+    ("alpha_char_frac_low", "alpha_char_frac", operator.lt, "min_alpha_char_frac"),
+    ("alpha_word_frac_low", "alpha_word_frac", operator.lt, "min_alpha_word_frac"),
+    ("too_few_stopwords", "stopword_count", operator.lt, "min_stopwords"),
+    ("dup_line_frac_high", "dup_line_frac", operator.gt, "max_dup_line_frac"),
+    ("top_2gram_frac_high", "top_ngram_frac_2", operator.gt, "max_top_ngram_frac_2"),
+    ("top_3gram_frac_high", "top_ngram_frac_3", operator.gt, "max_top_ngram_frac_3"),
+    ("top_4gram_frac_high", "top_ngram_frac_4", operator.gt, "max_top_ngram_frac_4"),
+    ("bullet_line_frac_high", "bullet_line_frac", operator.gt, "max_bullet_line_frac"),
+    ("ellipsis_line_frac_high", "ellipsis_line_frac", operator.gt, "max_ellipsis_line_frac"),
+    ("has_braces", "brace_char_count", operator.gt, "max_brace_chars"),
+    ("lang_not_allowed", "lang_pred", _not_in, "allowed_langs"),
+    ("lang_score_low", "lang_score", operator.lt, "min_lang_score"),
+    ("perplexity_high", "perplexity", operator.gt, "max_perplexity"),
+    ("toxicity", "tox_match_count", operator.gt, "max_tox_matches"),
+)
+
+
+def rule_failures(col: Callable[[str], Any], cfg: QCConfig) -> dict[str, Any]:
+    """rule name → expression that is True when the rule fails, in ``RULES``
+    order. ``col`` maps a stat name to a pandas Series (``stats.__getitem__``)
+    or a Spark Column (``F.col``); the comparisons work the same on both."""
+    return {name: fails(col(stat), getattr(cfg, knob)) for name, stat, fails, knob in RULES}

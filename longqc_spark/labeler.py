@@ -3,46 +3,21 @@
 Single-node, serial, no Spark: plays the role LongQC's native kernels play as
 ground truth (the sdust table contract, reference ``README.md:139-145``).
 Produces per-document ``(keep, reasons, scrubbed_text)`` from the SAME kernels
-(:mod:`longqc_spark.kernels`) and the SAME config, evaluated in the SAME fixed
-rule order (``QCConfig.rule_names``; decision-cascade analog of
-``longQC.py:787-824``).
+(:mod:`longqc_spark.kernels`), the SAME config and the SAME rule table
+(``config.RULES`` through ``config.rule_failures``, here over pandas Series;
+decision-cascade analog of ``longQC.py:787-824``).
 
-The Spark pipeline re-expresses the rule comparisons as Catalyst Column
-expressions; the pytest gate (tests/test_pipeline_vs_labeler.py) asserts
-keep/drop F1 ≥ 0.99 (empirically 1.0) and byte-identical scrubbed text.
+The pytest gate (tests/test_pipeline_vs_labeler.py) asserts keep/drop
+F1 ≥ 0.99 (empirically 1.0) and byte-identical scrubbed text;
+tests/test_rules.py pins each rule's threshold and comparison.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 
-from .config import DEFAULT_CONFIG, QCConfig
+from .config import DEFAULT_CONFIG, QCConfig, rule_failures
 from .kernels import compute_stats, scrub_batch
-
-
-def rule_failures(stats: pd.DataFrame, cfg: QCConfig) -> pd.DataFrame:
-    """Boolean column per rule name, True = rule failed (doc violates it)."""
-    f = pd.DataFrame(index=stats.index)
-    f["too_few_words"] = stats.n_words < cfg.min_words
-    f["too_many_words"] = stats.n_words > cfg.max_words
-    f["mean_word_len_low"] = stats.mean_word_len < cfg.min_mean_word_len
-    f["mean_word_len_high"] = stats.mean_word_len > cfg.max_mean_word_len
-    f["symbol_ratio_high"] = stats.symbol_char_frac > cfg.max_symbol_char_frac
-    f["alpha_char_frac_low"] = stats.alpha_char_frac < cfg.min_alpha_char_frac
-    f["alpha_word_frac_low"] = stats.alpha_word_frac < cfg.min_alpha_word_frac
-    f["too_few_stopwords"] = stats.stopword_count < cfg.min_stopwords
-    f["dup_line_frac_high"] = stats.dup_line_frac > cfg.max_dup_line_frac
-    f["top_2gram_frac_high"] = stats.top_ngram_frac_2 > cfg.max_top_ngram_frac_2
-    f["top_3gram_frac_high"] = stats.top_ngram_frac_3 > cfg.max_top_ngram_frac_3
-    f["top_4gram_frac_high"] = stats.top_ngram_frac_4 > cfg.max_top_ngram_frac_4
-    f["bullet_line_frac_high"] = stats.bullet_line_frac > cfg.max_bullet_line_frac
-    f["ellipsis_line_frac_high"] = stats.ellipsis_line_frac > cfg.max_ellipsis_line_frac
-    f["has_braces"] = stats.brace_char_count > cfg.max_brace_chars
-    f["lang_not_allowed"] = ~stats.lang_pred.isin(cfg.allowed_langs)
-    f["lang_score_low"] = stats.lang_score < cfg.min_lang_score
-    f["perplexity_high"] = stats.perplexity > cfg.max_perplexity
-    f["toxicity"] = stats.tox_match_count > cfg.max_tox_matches
-    return f[list(cfg.rule_names)]
 
 
 def label_corpus(pdf: pd.DataFrame, cfg: QCConfig = DEFAULT_CONFIG) -> pd.DataFrame:
@@ -57,8 +32,8 @@ def label_corpus(pdf: pd.DataFrame, cfg: QCConfig = DEFAULT_CONFIG) -> pd.DataFr
     )
     scrub = scrub_batch(pdf["text"].reset_index(drop=True), cfg)
     stats = pd.concat([stats, scrub], axis=1)
-    fails = rule_failures(stats, cfg)
-    reasons = fails.apply(lambda row: [n for n in cfg.rule_names if row[n]], axis=1)
+    fails = pd.DataFrame(rule_failures(stats.__getitem__, cfg))
+    reasons = fails.apply(lambda row: [n for n in fails.columns if row[n]], axis=1)
     out = pd.DataFrame(
         {
             "url": pdf["url"].reset_index(drop=True),

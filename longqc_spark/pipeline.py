@@ -14,24 +14,26 @@ through Arrow once and computing every per-doc number in that single pass is
 the 100 TB-scale analog of the reference running sdust+adapter+GC on a chunk
 while it is hot in memory (``longQC.py:299-341``).
 
-The rule comparisons are Column expressions (not computed in the UDF) so
-Catalyst can prune/push them and the audit table can store the stat vector
-independently of the decision config.
+The rules are evaluated as Column expressions (not in the UDF) so Catalyst
+can prune/push them and the audit table can store the stat vector
+independently of the decision config. They come from the one rule table
+(``config.RULES`` through ``config.rule_failures``) that the reference
+labeler evaluates over pandas Series.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from .config import DEFAULT_CONFIG, QCConfig
+from .config import DEFAULT_CONFIG, QCConfig, rule_failures
+from .kernels import compute_stats, scrub_batch
 
 # Version of the labels-table schema qc_pipeline emits. Bump whenever a
 # column is added/removed/retyped (v2 = payload_md5 added in round 3) —
 # lineage stamps this into run_config so a resume cannot mix per-bucket
 # label schemas under one manifest.
 LABEL_SCHEMA_VERSION = 2
-from .kernels import compute_stats, scrub_batch
 
 # ---------------------------------------------------------------------------
 # Schemas
@@ -175,44 +177,11 @@ def with_stats_and_scrub(
 # ---------------------------------------------------------------------------
 
 
-def rule_conditions(cfg: QCConfig = DEFAULT_CONFIG) -> dict[str, Column]:
-    """rule name → Column that is True when the rule FAILS (drop signal).
-
-    Must mirror ``labeler.rule_failures`` comparison-for-comparison; both
-    consume identical float64 values (Arrow round-trip is exact), so JVM vs
-    numpy evaluation cannot disagree.
-    """
-    c = F.col
-    return {
-        "too_few_words": c("n_words") < cfg.min_words,
-        "too_many_words": c("n_words") > cfg.max_words,
-        "mean_word_len_low": c("mean_word_len") < cfg.min_mean_word_len,
-        "mean_word_len_high": c("mean_word_len") > cfg.max_mean_word_len,
-        "symbol_ratio_high": c("symbol_char_frac") > cfg.max_symbol_char_frac,
-        "alpha_char_frac_low": c("alpha_char_frac") < cfg.min_alpha_char_frac,
-        "alpha_word_frac_low": c("alpha_word_frac") < cfg.min_alpha_word_frac,
-        "too_few_stopwords": c("stopword_count") < cfg.min_stopwords,
-        "dup_line_frac_high": c("dup_line_frac") > cfg.max_dup_line_frac,
-        "top_2gram_frac_high": c("top_ngram_frac_2") > cfg.max_top_ngram_frac_2,
-        "top_3gram_frac_high": c("top_ngram_frac_3") > cfg.max_top_ngram_frac_3,
-        "top_4gram_frac_high": c("top_ngram_frac_4") > cfg.max_top_ngram_frac_4,
-        "bullet_line_frac_high": c("bullet_line_frac") > cfg.max_bullet_line_frac,
-        "ellipsis_line_frac_high": c("ellipsis_line_frac") > cfg.max_ellipsis_line_frac,
-        "has_braces": c("brace_char_count") > cfg.max_brace_chars,
-        "lang_not_allowed": ~c("lang_pred").isin(*cfg.allowed_langs),
-        "lang_score_low": c("lang_score") < cfg.min_lang_score,
-        "perplexity_high": c("perplexity") > cfg.max_perplexity,
-        "toxicity": c("tox_match_count") > cfg.max_tox_matches,
-    }
-
-
 def with_labels(stats_df: DataFrame, cfg: QCConfig = DEFAULT_CONFIG) -> DataFrame:
     """Add ``reasons array<string>`` (failed rules, fixed order) and
     ``keep boolean`` — whole-stage-codegen territory, no Python."""
-    conds = rule_conditions(cfg)
-    reason_arr = F.array(
-        *[F.when(conds[name], F.lit(name)) for name in cfg.rule_names]
-    )
+    conds = rule_failures(F.col, cfg)
+    reason_arr = F.array(*[F.when(cond, F.lit(name)) for name, cond in conds.items()])
     reasons = F.filter(reason_arr, lambda x: x.isNotNull())
     return stats_df.withColumn("reasons", reasons).withColumn(
         "keep", F.size("reasons") == 0
