@@ -14,8 +14,15 @@ Because the floats and scrubbed bytes are produced by literally the same
 code, keep/drop F1 vs the reference labels is a structural identity and the
 scrub output is byte-identical per url (BASELINE.json north_rule).
 
-Everything operates on Arrow-sized batches; per-doc work uses
-``collections.Counter``/numpy — no Spark-row-at-a-time Python anywhere.
+Everything operates on Arrow-sized batches. Most per-doc numbers are numpy
+reductions over flat token/line streams, or Arrow compute kernels (the line
+stats, the RE2 scrub prefilters). Per-row Python remains in three places:
+
+* ``scrub_text`` on each doc a prefilter flags (~1 in 6 on ``qc_text``),
+  running only the patterns flagged for that doc;
+* the char-class regexes and the lower/hash work, once per UNIQUE token;
+* C-speed ``map``/generator loops over the batch (token counts, ``{``
+  counts, the token-stream flatten).
 """
 
 from __future__ import annotations
@@ -26,6 +33,8 @@ from itertools import chain
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .config import STOPWORDS, TOX_WORDS, QCConfig
 from .models import hash_tokens, langid_model, ngram_keys, ngram_keys_all, ngram_lm
@@ -151,36 +160,39 @@ def _flat_line_stats(
 
     dup_line_frac: fraction of non-empty stripped lines repeating an earlier
     line (flat-stream version of ``_dup_line_frac``). bullet/ellipsis: Gopher
-    line-shape fractions over the same non-empty stripped lines."""
+    line-shape fractions over the same non-empty stripped lines.
+
+    Runs in Arrow kernels: ``utf8_trim_whitespace`` strips exactly the 29
+    code points ``str.isspace`` accepts (tests/test_prefilters.py), and
+    distinct lines are counted on exact ``dictionary_encode`` codes."""
     n_docs = len(texts)
-    split = texts.str.split("\n")
-    n_lines = np.fromiter(map(len, split), dtype=np.int64, count=n_docs)
-    flat = pd.Series(list(chain.from_iterable(split)), dtype=object)
-    stripped_s = flat.str.strip()
-    stripped = stripped_s.to_numpy()
-    nonempty = np.fromiter(map(len, stripped), dtype=np.int64) > 0
-    doc_ids = np.repeat(np.arange(n_docs), n_lines)[nonempty]
+    lines = pc.split_pattern(pa.array(texts.to_numpy(), type=pa.large_string()), "\n")
+    n_lines = pc.list_value_length(lines).to_numpy().astype(np.int64)
+    stripped = pc.utf8_trim_whitespace(lines.flatten())
+    nonempty = pc.greater(pc.binary_length(stripped), 0)
+    stripped = stripped.filter(nonempty)
+    doc_ids = np.repeat(np.arange(n_docs), n_lines)[nonempty.to_numpy(zero_copy_only=False)]
     total = np.bincount(doc_ids, minlength=n_docs)
     safe_total = np.maximum(total, 1).astype(np.float64)
 
-    hashes = hash_tokens(stripped[nonempty])
-    sort_idx = np.lexsort((hashes, doc_ids))
-    h, d = hashes[sort_idx], doc_ids[sort_idx]
-    boundary = np.empty(h.shape[0], dtype=bool)
-    if h.shape[0]:
-        boundary[0] = True
-        boundary[1:] = (h[1:] != h[:-1]) | (d[1:] != d[:-1])
-    distinct = np.bincount(d[boundary], minlength=n_docs) if h.shape[0] else np.zeros(n_docs, dtype=np.int64)
+    codes = stripped.dictionary_encode().indices.to_numpy().astype(np.int64)
+    n_codes = int(codes.max()) + 1 if codes.shape[0] else 1
+    distinct = np.bincount(np.unique(doc_ids * n_codes + codes) // n_codes, minlength=n_docs)
     dup = np.zeros(n_docs, dtype=np.float64)
     many = total > 1
     dup[many] = 1.0 - distinct[many] / total[many]
 
-    first = stripped_s.str.slice(0, 1).to_numpy()[nonempty]
-    bullet_hits = np.isin(first, _BULLET_CHARS).astype(np.float64)
-    bullet = np.bincount(doc_ids, weights=bullet_hits, minlength=n_docs) / safe_total
-    is_ell = stripped_s.str.endswith(_ELLIPSIS_SUFFIXES).to_numpy()[nonempty]
-    ellipsis = (
-        np.bincount(doc_ids, weights=is_ell.astype(np.float64), minlength=n_docs) / safe_total
+    first = pc.utf8_slice_codeunits(stripped, 0, 1)
+    is_bullet = pc.is_in(first, value_set=pa.array(_BULLET_CHARS, pa.large_string()))
+    is_ell = pc.or_(*(pc.ends_with(stripped, s) for s in _ELLIPSIS_SUFFIXES))
+    bullet, ellipsis = (
+        np.bincount(
+            doc_ids,
+            weights=hits.to_numpy(zero_copy_only=False).astype(np.float64),
+            minlength=n_docs,
+        )
+        / safe_total
+        for hits in (is_bullet, is_ell)
     )
     return dup, bullet, ellipsis, n_lines
 
@@ -193,11 +205,12 @@ def compute_stats(
     """Per-document stat vector (FIXTURES.md §3 ``qc_stats`` shape minus the
     scrub counters, which the scrub kernel produces).
 
-    Fully vectorized flat-token-stream design: the whole Arrow batch is one
-    token array (doc ids via ``np.repeat``), every per-doc number is a
-    ``np.bincount`` / sorted-run reduction — zero per-row Python beyond the
-    C-speed flatten. This is what makes the UDF stage memory-lean enough to
-    scale past the SMT knee on wide hosts.
+    Flat-token-stream design: the whole Arrow batch is one token array (doc
+    ids via ``np.repeat``), every per-doc number is a ``np.bincount`` /
+    sorted-run reduction. Python-level work is per UNIQUE token (the
+    char-class regexes), plus the C-speed flatten and per-doc ``{`` count;
+    the line stats run in Arrow kernels. This is what makes the UDF stage
+    memory-lean enough to scale past the SMT knee on wide hosts.
     """
     texts = texts.fillna("")
     lid = langid_model()
@@ -398,19 +411,35 @@ def scrub_text(text: str, cfg: QCConfig) -> tuple[str, int, int, list[tuple[int,
     declaration order; byte-identical across both engines because this is the
     only implementation.
     """
+    return _scrub(text, _scrub_patterns(cfg), cfg.scrub_fuzzy, cfg)
+
+
+def _scrub_patterns(cfg: QCConfig) -> tuple[tuple[str, re.Pattern], ...]:
+    """The exact-regex cascade ``cfg`` enables, in declaration order."""
+    return (PII_PATTERNS if cfg.scrub_pii else ()) + (
+        (("TOX", TOX_PATTERN),) if cfg.scrub_tox else ()
+    )
+
+
+def _scrub(
+    text: str,
+    patterns: tuple[tuple[str, re.Pattern], ...],
+    fuzzy: bool,
+    cfg: QCConfig,
+) -> tuple[str, int, int, list[tuple[int, int, str]]]:
+    """``scrub_text`` running only ``patterns`` (a subsequence of
+    ``_scrub_patterns(cfg)``) and the fuzzy pass only if ``fuzzy``. Equal to
+    ``scrub_text`` whenever the skipped passes have no match in ``text``."""
     spans: list[tuple[int, int, str]] = []
     n_pii = 0
     n_tox = 0
-    if cfg.scrub_pii:
-        for kind, pat in PII_PATTERNS:
-            for m in pat.finditer(text):
-                spans.append((m.start(), m.end(), kind))
     # Overlapping spans: earlier start wins, then longer match; ties resolve
-    # by pattern declaration order because sort is stable.
-    if cfg.scrub_tox:
-        for m in TOX_PATTERN.finditer(text):
-            spans.append((m.start(), m.end(), "TOX"))
-    if cfg.scrub_fuzzy:
+    # by pattern declaration order (PII, then TOX, then TOXF) because sort
+    # is stable.
+    for kind, pat in patterns:
+        for m in pat.finditer(text):
+            spans.append((m.start(), m.end(), kind))
+    if fuzzy:
         # tolerance pass (opt-in): whitespace tokens within fuzzy_max_dist
         # edits of a lexicon term at ≥ fuzzy_min_identity; exact TOX spans
         # appended first win equal-start/equal-length ties (stable sort)
@@ -442,9 +471,38 @@ def scrub_text(text: str, cfg: QCConfig) -> tuple[str, int, int, list[tuple[int,
     return "".join(out), n_pii, n_tox, kept
 
 
+def _re2_superset(pat: re.Pattern) -> str:
+    r"""An RE2 pattern that matches every string ``pat`` finds a match in.
+
+    RE2's ``\b`` and ``\d`` are ASCII-only, unlike Python's, so ``\b`` is
+    dropped (an assertion only narrows a match) and ``\d`` becomes
+    ``\p{Nd}``, which contains every code point Python's ``\d`` matches.
+    RE2's ``(?i)`` folds every character Python's ``re.IGNORECASE`` folds
+    onto a lexicon letter, the long s and the Kelvin sign included.
+    tests/test_prefilters.py checks all three claims. EMAIL uses neither
+    ``\b`` nor ``\d``, so its mask is exact."""
+    src = pat.pattern.replace(r"\b", "").replace(r"\d", r"\p{Nd}")
+    return ("(?i)" if pat.flags & re.IGNORECASE else "") + src
+
+
+def _scrub_candidates(arr: pa.Array, patterns) -> np.ndarray:
+    """Bool matrix (docs × patterns): True where the doc may contain a match
+    of that pattern. One linear-time RE2 pass per pattern over the batch."""
+    out = np.zeros((len(arr), len(patterns)), dtype=bool)
+    for k, (_, pat) in enumerate(patterns):
+        out[:, k] = pc.match_substring_regex(arr, _re2_superset(pat)).to_numpy(
+            zero_copy_only=False
+        )
+    return out
+
+
 def scrub_batch(texts: pd.Series, cfg: QCConfig, emit_spans: bool = False) -> pd.DataFrame:
     """Batch scrub → DataFrame(scrubbed_text, pii_match_count, tox_match_count
     [, scrub_spans]).
+
+    Each doc runs only the Python patterns its RE2 prefilter flags
+    (``_scrub_candidates``); docs flagged for none skip ``scrub_text``'s
+    cascade, and the bytes of the others still come from it.
 
     ``emit_spans`` is opt-in: converting per-row lists of structs through
     Arrow costs more than the scrub itself; the default hot path ships only
@@ -453,22 +511,19 @@ def scrub_batch(texts: pd.Series, cfg: QCConfig, emit_spans: bool = False) -> pd
     """
     texts = texts.fillna("")
     n = len(texts)
-    scrubbed = np.empty(n, dtype=object)
+    arr = texts.to_numpy()
+    scrubbed = arr.copy()
     n_pii = np.zeros(n, dtype=np.int64)
     n_tox = np.zeros(n, dtype=np.int64)
-    span_col = np.empty(n, dtype=object) if emit_spans else None
-    # vectorized candidate pre-filter: every PII pattern needs '@' or a
-    # digit, toxicity needs a lexicon hit — docs with neither skip the
-    # per-doc regex cascade entirely (same shared scrub_text for the rest,
-    # so semantics are unchanged)
-    arr = texts.to_numpy()
-    maybe_pii = (texts.str.contains("@", regex=False) | texts.str.contains(r"\d", regex=True)).to_numpy()
-    maybe_tox = texts.str.contains(TOX_PATTERN).to_numpy()
-    candidates = maybe_pii | maybe_tox
+    span_col = [[] for _ in range(n)] if emit_spans else None
+    patterns = _scrub_patterns(cfg)
+    flags = _scrub_candidates(pa.array(arr, type=pa.large_string()), patterns)
+    fuzzy = np.zeros(n, dtype=bool)
     if cfg.scrub_fuzzy:
         # fuzzy candidacy via the factorized unique-token stream: the DP runs
         # once per UNIQUE token (memoized), then fans out via codes — same
-        # cost model as compute_stats, so the opt-in path keeps the prefilter
+        # cost model as compute_stats. Exact: str.split() and _TOKEN_RE cut
+        # the same tokens.
         split = texts.str.split()
         n_tok_f = np.fromiter(map(len, split), dtype=np.int64, count=n)
         flat_f = pd.Series(list(chain.from_iterable(split)), dtype=object)
@@ -483,15 +538,10 @@ def scrub_batch(texts: pd.Series, cfg: QCConfig, emit_spans: bool = False) -> pd
                 count=len(uniq_f),
             )
             doc_ids_f = np.repeat(np.arange(n), n_tok_f)
-            candidates = candidates | (
-                np.bincount(doc_ids_f, weights=u_hit[codes_f].astype(np.float64), minlength=n) > 0
-            )
-    for i in np.flatnonzero(~candidates):
-        scrubbed[i] = arr[i]
-        if emit_spans:
-            span_col[i] = []
-    for i in np.flatnonzero(candidates):
-        s, p, t, spans = scrub_text(arr[i], cfg)
+            fuzzy = np.bincount(doc_ids_f, weights=u_hit[codes_f].astype(np.float64), minlength=n) > 0
+    for i in np.flatnonzero(flags.any(axis=1) | fuzzy):
+        pats = tuple(patterns[k] for k in np.flatnonzero(flags[i]))
+        s, p, t, spans = _scrub(arr[i], pats, fuzzy[i], cfg)
         scrubbed[i] = s
         n_pii[i] = p
         n_tox[i] = t

@@ -11,9 +11,11 @@ pre-built minimap2 index reused across runs (reference ``longQC.py:266-277``):
 
 Both score **flat token/char streams** covering a whole Arrow batch of
 documents at once (doc boundaries passed as offset arrays, per-doc reductions
-via ``np.bincount``) — the "zero per-row Python" requirement of
-BASELINE.json; the design mirrors the reference replacing per-base ``pow``
-with a lookup table (author note ``lqutils.c:60-69``), applied batch-wide.
+via ``np.bincount``); the design mirrors the reference replacing per-base
+``pow`` with a lookup table (author note ``lqutils.c:60-69``), applied
+batch-wide. The scoring itself is numpy; the only per-row Python is
+``LangIdModel.score_batch`` lower-casing and utf-8 encoding each doc's
+bounded prefix before the join into one buffer.
 
 Token hashing uses ``pandas.util.hash_array`` (SipHash with a fixed key —
 deterministic across processes and platforms; Python's builtin ``hash`` is

@@ -5,9 +5,11 @@ keep/drop → record rewriting → summary reports; reference ``longQC.py:299-36
 369-418, 787-824``) re-expressed Spark-first:
 
     scan → salted url-hash repartition → ONE ``mapInPandas`` pass producing
-    the full stat vector + scrubbed text (Arrow-batched, zero per-row Python)
-    → keep/drop + reasons as pure Column expressions (JVM/codegen side) →
-    labels DataFrame → summary aggs (report.py).
+    the full stat vector + scrubbed text (Arrow-batched; per-row Python only
+    in ``scrub_text`` on prefilter-flagged docs and in the per-unique-token
+    regexes, see kernels.py) → keep/drop + reasons as pure Column
+    expressions (JVM/codegen side) → labels DataFrame → summary aggs
+    (report.py).
 
 Why one ``mapInPandas`` for stats+scrub: text is the wide column; decoding it
 through Arrow once and computing every per-doc number in that single pass is

@@ -13,9 +13,12 @@ zip and jar on its path (``pyspark.zip``, the py4j zip, the spark-core jar):
 ~0.2 s per task against ~1 ms of user code (64 trivial tasks on local[1]:
 13.8 s stock, 3.5 s now). On a 4-core host the ``perfbench`` median
 ``wall_s`` fell 1.69 -> 0.94 s on ``qc_short`` and 2.12 -> 1.26 s on
-``qc_text``, and worker RSS by 7-8 %; see CHANGES.md for the A/B. The daemon
-module's one invariant: it imports only the standard library and
-``pyspark.daemon``.
+``qc_text``, and worker RSS by 7-8 %; see CHANGES.md for the A/B. The same
+daemon also has each worker ``gc.freeze()`` its heap once, after its first
+task, so the stock full ``gc.collect()`` between tasks no longer rescans the
+worker's pandas/pyarrow/model objects (20-85 ms per task before, ~1 ms
+after). The daemon module's one invariant: it imports only the standard
+library and ``pyspark.daemon``.
 
 ``spark.executorEnv.PYTHONPATH`` puts the package root on the workers' path
 (Spark merges it with its own entries and the caller's ``PYTHONPATH``), so

@@ -5,7 +5,9 @@ PYTHONPATH unset: the workers must find the package through get_spark's
 executorEnv, skip only the zipimporter re-reads, and keep FileFinder
 invalidation (a .py shipped with addPyFile after the worker is warm still
 imports). local[1] runs one task at a time on reused workers, so the late
-import runs in a worker that already cached the files directory.
+import runs in a worker that already cached the files directory, and a
+worker's first task can be told from its later ones (the heap is frozen
+once, between them).
 """
 
 import json
@@ -32,6 +34,19 @@ SCRIPT = textwrap.dedent(
     out = {"driver_invalidate": zipimport.zipimporter.invalidate_caches.__qualname__}
     spark = get_spark("worker-daemon-test", cores=1)
     sc = spark.sparkContext
+
+    def freeze_probe(batches):
+        import gc
+
+        import pandas as pd
+
+        for _ in batches:
+            yield pd.DataFrame({"pid": [os.getpid()], "frozen": [gc.get_freeze_count()]})
+
+    # the session's first Python job, through the mapInPandas path qc_pipeline
+    # uses: its first task runs in a fresh worker
+    probe = spark.range(0, 6, 1, 6).mapInPandas(freeze_probe, "pid long, frozen long")
+    out["freeze_probe"] = [(r.pid, r.frozen) for r in probe.collect()]
 
     out["rdd_sum"] = sc.parallelize(range(8), 4).map(lambda x: x * x).sum()
 
@@ -132,6 +147,14 @@ def test_workers_keep_zip_directories(result):
     assert result["worker_zip_reads"] == 0
     # the driver process keeps the stock behaviour
     assert result["driver_invalidate"] == "zipimporter.invalidate_caches"
+
+
+def test_worker_freezes_heap_once_after_first_task(result):
+    pids = {pid for pid, _ in result["freeze_probe"]}
+    counts = [count for _, count in result["freeze_probe"]]
+    assert len(pids) == 1, result["freeze_probe"]  # one reused worker
+    assert counts[0] == 0
+    assert counts[1] > 0 and set(counts[1:]) == {counts[1]}, counts
 
 
 def test_late_py_file_imports_in_warm_worker(result):
