@@ -88,6 +88,19 @@ EDGE_CASES: list[str | None] = [
     "שלום עולם frak\nمرحبا بالعالم ١٢٣-٤٥-٦٧٨٩\nשלום עולם frak",
     "{ braces } {{ }} and a brace { line\n{",
     "The quick brown fox. The quick brown fox. The quick brown fox.\n" * 5,
+    # case mappings where Arrow's utf8_lower differs from str.lower: dotted
+    # capital I (U+0130 lowers to two code points) and final sigma
+    "İstanbul İ istanbul İSTANBUL",
+    "ΟΔΟΣ ΟΔΟΣ. οδος ΣΑΣ Σ",
+    # tokens made only of '_', digits or punctuation
+    "___ 123 ... !?! _1_ ٣٤ --- ¿¡ «» 1.5 _ 9",
+    # docs starting or ending with whitespace str.split() drops
+    "\x1cstart mid end\x1c",
+    "　wide space　",
+    " line sep ",
+    "\x85next line\x85",
+    # a non-ASCII token repeated among ASCII ones
+    "the café and the café of café the naïve café",
 ]
 
 
