@@ -3,8 +3,9 @@
 Analog of LongQC's preset resolution (reference ``longQC.py:171-233``): one
 frozen config object binds every threshold, and one rule table (``RULES``)
 binds each keep/drop rule to its stat column, comparison and threshold field.
-The Spark rule stage and the pure-pandas reference labeler both evaluate that
-table through ``rule_failures``, so the two sides cannot drift.
+The pure-pandas reference labeler evaluates that table through
+``rule_failures``; the Spark rule stage writes the same table out as one SQL
+expression (``pipeline.reasons_sql``), so the two sides cannot drift.
 
 Thresholds follow the Gopher/C4 heuristic families named in BASELINE.json
 (doc length, mean word length, symbol/word ratio, repetition fractions,

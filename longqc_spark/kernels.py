@@ -15,21 +15,23 @@ code, keep/drop F1 vs the reference labels is a structural identity and the
 scrub output is byte-identical per url (BASELINE.json north_rule).
 
 Everything operates on Arrow-sized batches. Most per-doc numbers are numpy
-reductions over flat token/line streams, or Arrow compute kernels (the line
-stats, the RE2 scrub prefilters). Per-row Python remains in three places:
+reductions over flat token/line streams, or Arrow compute kernels (the
+tokenizer and its dictionary codes, the line stats, the RE2 scrub
+prefilters). Per-row Python remains in four places:
 
 * ``scrub_text`` on each doc a prefilter flags (~1 in 6 on ``qc_text``),
   running only the patterns flagged for that doc;
-* the char-class regexes and the lower/hash work, once per UNIQUE token;
-* C-speed ``map``/generator loops over the batch (token counts, ``{``
-  counts, the token-stream flatten).
+* ``str.lower`` and the char-class regexes once per UNIQUE non-ASCII token
+  (~0.5 % of the uniques on ``qc_text``; ASCII tokens use byte tables);
+* turning each unique token's lower-cased form into a Python ``str`` for
+  the SipHash token hash;
+* C-speed generator loops over the batch (the ``{`` count, the langid
+  prefix).
 """
 
 from __future__ import annotations
 
 import re
-from collections import Counter
-from itertools import chain
 
 import numpy as np
 import pandas as pd
@@ -37,17 +39,28 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .config import STOPWORDS, TOX_WORDS, QCConfig
-from .models import hash_tokens, langid_model, ngram_keys, ngram_keys_all, ngram_lm
+from .models import hash_tokens, langid_model, ngram_keys_all, ngram_lm
 
 # ---------------------------------------------------------------------------
 # Tokenization / char classes (fixed: both sides must agree exactly)
 # ---------------------------------------------------------------------------
 
-_ALPHA_RE = re.compile(r"[A-Za-zÀ-ÖØ-öø-ÿ]")
 _NOT_ALPHA_RE = re.compile(r"[^A-Za-zÀ-ÖØ-öø-ÿ]")
 _SYMBOL_RE = re.compile(r"[^\w\s]", re.UNICODE)
-_STOPWORD_SET = frozenset(STOPWORDS)
-_STOPWORD_HASHES = hash_tokens(np.array(sorted(_STOPWORD_SET), dtype=object))
+_STOPWORD_HASHES = hash_tokens(np.array(sorted(STOPWORDS), dtype=object))
+# The same two classes as byte tables, valid for ASCII tokens only: column 0
+# flags an alpha char, column 1 a symbol char. Arrow's Unicode classes and
+# case mappings differ from Python's beyond ASCII (RE2's \w on 4,388 code
+# points, utf8_lower on U+0130 and final sigma), so non-ASCII tokens keep
+# the regexes and ``str.lower``.
+_ASCII_CLASS_LUT = np.array(
+    [
+        [_NOT_ALPHA_RE.match(chr(b)) is None, _SYMBOL_RE.match(chr(b)) is not None]
+        if b < 128 else [False, False]
+        for b in range(256)
+    ],
+    dtype=np.int64,
+)
 
 # grow-only scratch for arange (fresh large allocations page-fault
 # expensively on this host; workers are long-lived so reuse wins)
@@ -90,27 +103,6 @@ _BULLET_CHARS = ("•", "-", "*")
 _ELLIPSIS_SUFFIXES = ("...", "…")
 
 
-def _top_ngram_frac(tokens: list[str], n: int) -> float:
-    """Fraction of tokens covered by the single most frequent word n-gram
-    (Gopher repetition signal; masked-fraction analog of sdust)."""
-    m = len(tokens) - n + 1
-    if m < 1 or len(tokens) == 0:
-        return 0.0
-    counts = Counter(tuple(tokens[i : i + n]) for i in range(m))
-    top = counts.most_common(1)[0][1]
-    if top <= 1:
-        return 0.0
-    return top * n / len(tokens)
-
-
-def _dup_line_frac(text: str) -> float:
-    """Fraction of non-empty lines that are repeats of an earlier line."""
-    lines = [ln for ln in (s.strip() for s in text.split("\n")) if ln]
-    if len(lines) <= 1:
-        return 0.0
-    return 1.0 - len(set(lines)) / len(lines)
-
-
 def _flat_top_ngram_frac(
     keys_full: np.ndarray,
     pos_in_doc: np.ndarray,
@@ -121,7 +113,8 @@ def _flat_top_ngram_frac(
     """Per-doc fraction of tokens covered by the most frequent word n-gram,
     computed over the flat token stream: hashed n-gram keys (``keys_full`` =
     precomputed ``ngram_keys`` for this order) → lexsort by (doc, key) →
-    run-length counts → per-doc max via ``np.maximum.at``.
+    run-length counts → per-doc max via ``np.maximum.reduceat`` over each
+    doc's runs (the runs are sorted by doc).
 
     Hashed counting (64-bit keys) is the declared spec; collision probability
     per doc is ~m²/2⁶⁵ — negligible, and both engines share this code.
@@ -144,29 +137,30 @@ def _flat_top_ngram_frac(
     run_starts = np.flatnonzero(boundary)
     run_counts = np.diff(np.append(run_starts, comp.shape[0]))
     run_docs = (comp[run_starts] >> np.uint64(40)).astype(np.int64)
+    doc_first = np.flatnonzero(np.append(True, run_docs[1:] != run_docs[:-1]))
     top = np.zeros(n_docs, dtype=np.int64)
-    np.maximum.at(top, run_docs, run_counts)
+    top[run_docs[doc_first]] = np.maximum.reduceat(run_counts, doc_first)
     covered = np.where(top > 1, top * order, 0).astype(np.float64)
     return np.divide(covered, n_tok, out=out, where=n_tok > 0)
 
 
 def _flat_line_stats(
-    texts: pd.Series,
+    arr: pa.Array,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """One pass over the flat line stream → per-doc
+    """One pass over the flat line stream of the docs in ``arr`` → per-doc
     ``(dup_line_frac, bullet_line_frac, ellipsis_line_frac, n_segments)``
     where n_segments = number of newline-split segments (callers zero it for
     empty docs to get n_lines).
 
     dup_line_frac: fraction of non-empty stripped lines repeating an earlier
-    line (flat-stream version of ``_dup_line_frac``). bullet/ellipsis: Gopher
-    line-shape fractions over the same non-empty stripped lines.
+    line. bullet/ellipsis: Gopher line-shape fractions over the same
+    non-empty stripped lines.
 
     Runs in Arrow kernels: ``utf8_trim_whitespace`` strips exactly the 29
     code points ``str.isspace`` accepts (tests/test_prefilters.py), and
     distinct lines are counted on exact ``dictionary_encode`` codes."""
-    n_docs = len(texts)
-    lines = pc.split_pattern(pa.array(texts.to_numpy(), type=pa.large_string()), "\n")
+    n_docs = len(arr)
+    lines = pc.split_pattern(arr, "\n")
     n_lines = pc.list_value_length(lines).to_numpy().astype(np.int64)
     stripped = pc.utf8_trim_whitespace(lines.flatten())
     nonempty = pc.greater(pc.binary_length(stripped), 0)
@@ -197,6 +191,56 @@ def _flat_line_stats(
     return dup, bullet, ellipsis, n_lines
 
 
+def _tokens(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, pa.Array]:
+    """The ``str.split()`` tokens of the docs in ``arr`` as one flat stream →
+    ``(n_tok per doc, code per token, unique tokens)``; ``uniques[codes]``
+    is the stream in doc order.
+
+    ``utf8_split_whitespace`` splits on exactly the ``str.isspace`` set
+    (tests/test_reference.py checks every code point) but, unlike
+    ``str.split()``, emits an empty token for leading or trailing whitespace
+    and for an empty doc; those are dropped and ``n_tok`` is counted after."""
+    parts = pc.utf8_split_whitespace(arr)
+    flat = parts.flatten()
+    keep = pc.greater(pc.binary_length(flat), 0).to_numpy(zero_copy_only=False)
+    per_doc = pc.list_value_length(parts).to_numpy()
+    doc_ids = np.repeat(np.arange(len(arr)), per_doc)[keep]
+    enc = flat.filter(pa.array(keep)).dictionary_encode()
+    n_tok = np.bincount(doc_ids, minlength=len(arr))
+    return n_tok, enc.indices.to_numpy(), enc.dictionary
+
+
+def _unique_token_stats(
+    uniq: pa.Array,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Per unique token → ``(lower-cased form (object array), its length,
+    alpha-char count, symbol-char count)``; the char classes are
+    ``_NOT_ALPHA_RE``'s complement and ``_SYMBOL_RE``.
+
+    ASCII tokens (all but ~0.5 % of the uniques on web text) are classified
+    from the UTF-8 byte buffer through ``_ASCII_CLASS_LUT`` and lower-cased
+    by ``ascii_lower``; the rest go through ``str.lower`` and the regexes."""
+    n = len(uniq)
+    offsets = np.frombuffer(uniq.buffers()[1], dtype=np.int64)[uniq.offset : uniq.offset + n + 1]
+    data = np.frombuffer(uniq.buffers()[2], dtype=np.uint8)[offsets[0] : offsets[-1]]
+    # per-token class counts as differences of a running count over the bytes
+    run = np.zeros((data.shape[0] + 1, 2), dtype=np.int64)
+    np.cumsum(_ASCII_CLASS_LUT[data], axis=0, out=run[1:])
+    rel = offsets - offsets[0]
+    counts = (run[rel[1:]] - run[rel[:-1]]).astype(np.float64)
+    u_alpha_cnt, u_sym_cnt = counts[:, 0], counts[:, 1]
+    u_len = np.diff(rel).astype(np.float64)
+    u_lower = pc.ascii_lower(uniq).to_numpy(zero_copy_only=False)
+    wide = np.flatnonzero(~pc.string_is_ascii(uniq).to_numpy(zero_copy_only=False))
+    for i, t in zip(wide, uniq.take(pa.array(wide)).to_pylist()):
+        low = t.lower()
+        u_lower[i] = low
+        u_len[i] = len(low)
+        u_alpha_cnt[i] = len(_NOT_ALPHA_RE.sub("", t))
+        u_sym_cnt[i] = len(t) - len(_SYMBOL_RE.sub("", t))
+    return u_lower, u_len, u_alpha_cnt, u_sym_cnt
+
+
 def compute_stats(
     texts: pd.Series,
     q_threshold: float = -8.0,
@@ -207,10 +251,13 @@ def compute_stats(
 
     Flat-token-stream design: the whole Arrow batch is one token array (doc
     ids via ``np.repeat``), every per-doc number is a ``np.bincount`` /
-    sorted-run reduction. Python-level work is per UNIQUE token (the
-    char-class regexes), plus the C-speed flatten and per-doc ``{`` count;
-    the line stats run in Arrow kernels. This is what makes the UDF stage
-    memory-lean enough to scale past the SMT knee on wide hosts.
+    sorted-run reduction. Tokens, their codes and the per-unique-token char
+    classes come from Arrow kernels and byte tables (``_tokens``,
+    ``_unique_token_stats``); Python-level work is per UNIQUE non-ASCII
+    token plus the hashing of each unique token's lower-cased form. The
+    line stats and ``n_chars`` run in Arrow kernels too. This is what makes
+    the UDF stage memory-lean enough to scale past the SMT knee on wide
+    hosts.
     """
     texts = texts.fillna("")
     lid = langid_model()
@@ -225,43 +272,29 @@ def compute_stats(
             }
         )
 
-    arr0 = texts.to_numpy()
-    n_chars = texts.str.len().astype("int64")
-    safe_chars = n_chars.replace(0, 1).astype("float64")
+    docs = texts.to_numpy()
+    arr = pa.array(docs, type=pa.large_string())
+    n_chars = pc.utf8_length(arr).to_numpy()
+    safe_chars = np.maximum(n_chars, 1).astype(np.float64)
 
     # ---- flat token stream ----
-    split = texts.str.split()
-    n_tok = np.fromiter(map(len, split), dtype=np.int64, count=n_docs)
-    flat = pd.Series(list(chain.from_iterable(split)), dtype=object)
-    total = flat.shape[0]
+    # all per-token work (length, char classes, hashing, stopword
+    # membership) runs once per UNIQUE token, then fans out via codes
+    n_tok, codes, uniq = _tokens(arr)
+    total = codes.shape[0]
     doc_ids = np.repeat(np.arange(n_docs), n_tok)
     starts = np.concatenate(([0], np.cumsum(n_tok)[:-1]))
     pos_in_doc = _arange(total) - np.repeat(starts, n_tok)
     safe_tok = np.maximum(n_tok, 1).astype(np.float64)
 
-    # factorize: all per-token work (length, regex, hashing, stopword
-    # membership) runs once per UNIQUE token, then fans out via codes
-    codes, uniques = pd.factorize(flat, use_na_sentinel=False)
-    uniq = pd.Series(uniques, dtype=object)
-    u_lower = uniq.str.lower()
-    u_len = u_lower.str.len().to_numpy(dtype=np.float64)
-    u_alpha = uniq.str.contains(_ALPHA_RE, regex=True).to_numpy(dtype=np.float64)
-    u_hash = hash_tokens(u_lower.to_numpy())
+    u_lower, u_len, u_alpha_cnt, u_sym_cnt = _unique_token_stats(uniq)
+    u_alpha = (u_alpha_cnt > 0).astype(np.float64)
+    u_hash = hash_tokens(u_lower)
     # stopword membership via token hashes (uint64 isin beats object isin
     # ~10×; SipHash collisions against a 29-word list are negligible)
     u_stop = np.isin(u_hash, _STOPWORD_HASHES).astype(np.float64)
-    # char-class counts on UNIQUE tokens only (alpha/symbol chars never occur
-    # in whitespace, so per-doc totals over the token stream are exactly the
-    # per-doc totals over the text; the regex runs once per unique token —
-    # cost ∝ unique-token volume, not corpus volume), fanned out via codes
-    u_arr = uniq.to_numpy()
-    n_uniq = len(u_arr)
-    u_alpha_cnt = np.fromiter(
-        (len(_NOT_ALPHA_RE.sub("", t)) for t in u_arr), np.float64, n_uniq
-    )
-    u_sym_cnt = np.fromiter(
-        (len(t) - len(_SYMBOL_RE.sub("", t)) for t in u_arr), np.float64, n_uniq
-    )
+    # alpha/symbol chars never occur in whitespace, so per-doc totals over
+    # the token stream are exactly the per-doc totals over the text
     alpha_chars = np.bincount(doc_ids, weights=u_alpha_cnt[codes], minlength=n_docs)
     symbol_chars = np.bincount(doc_ids, weights=u_sym_cnt[codes], minlength=n_docs)
 
@@ -283,21 +316,23 @@ def compute_stats(
     logprob_mean[nonempty] = sums[nonempty] / n_tok[nonempty]
     frac_above = np.bincount(doc_ids, weights=(lps > q_threshold).astype(np.float64), minlength=n_docs) / safe_tok
 
-    dup_line, bullet_line, ellipsis_line, n_segments = _flat_line_stats(texts)
-    n_lines = np.where(n_chars.to_numpy() > 0, n_segments, 0)
-    brace_count = np.fromiter((t.count("{") for t in arr0), np.int64, n_docs)
+    dup_line, bullet_line, ellipsis_line, n_segments = _flat_line_stats(arr)
+    n_lines = np.where(n_chars > 0, n_segments, 0)
+    # str.count and str slicing over the object array beat count_substring
+    # and utf8_slice_codeunits here (~0.6 vs 2.8 and ~0.5 vs 2.0 µs/doc)
+    brace_count = np.fromiter((t.count("{") for t in docs), np.int64, n_docs)
     # langid reads a bounded prefix (spec: langid_max_chars) — trigram volume
     # is ~6× token volume, so this is the kernel's main memory-traffic knob
-    lang_pred, lang_score = lid.score_batch(texts.str.slice(0, langid_max_chars))
+    lang_pred, lang_score = lid.score_batch(pd.Series([t[:langid_max_chars] for t in docs]))
 
     return pd.DataFrame(
         {
-            "n_chars": n_chars.to_numpy(),
+            "n_chars": n_chars,
             "n_words": n_tok,
             "n_lines": n_lines,
             "mean_word_len": mean_word_len,
-            "symbol_char_frac": (symbol_chars / safe_chars).to_numpy(),
-            "alpha_char_frac": (alpha_chars / safe_chars).to_numpy(),
+            "symbol_char_frac": symbol_chars / safe_chars,
+            "alpha_char_frac": alpha_chars / safe_chars,
             "alpha_word_frac": alpha_word_frac,
             "stopword_count": stopword_count,
             "dup_line_frac": dup_line,
@@ -328,6 +363,26 @@ PII_PATTERNS: tuple[tuple[str, re.Pattern], ...] = (
     ("PHONE", re.compile(r"\b(?:\+?\d{1,2}[ .-])?(?:\(\d{3}\)|\d{3})[ .-]\d{3}[ .-]\d{4}\b")),
     ("IPV4", re.compile(r"\b(?:\d{1,3}\.){3}\d{1,3}\b")),
 )
+
+# EMAIL's local part is a run of chars that excludes '@', so a match can only
+# start where such a run starts or where the last match ended, and the match
+# from any start inside a run ends where the one from the run start does.
+# Trying only those starts keeps ``_email_finditer`` linear; plain
+# ``finditer`` re-scans the rest of the run from every char of it.
+_EMAIL_RUN_START = re.compile(r"(?<![A-Za-z0-9._%+-])" + PII_PATTERNS[0][1].pattern)
+
+
+def _email_finditer(text: str):
+    """``PII_PATTERNS``' EMAIL ``finditer``, in time linear in ``text``."""
+    email = PII_PATTERNS[0][1]
+    pos = 0
+    while True:
+        m = email.match(text, pos) or _EMAIL_RUN_START.search(text, pos)
+        if m is None:
+            return
+        yield m
+        pos = m.end()
+
 
 TOX_PATTERN: re.Pattern = re.compile(
     r"\b(?:" + "|".join(re.escape(w) for w in TOX_WORDS) + r")\b", re.IGNORECASE
@@ -437,7 +492,7 @@ def _scrub(
     # by pattern declaration order (PII, then TOX, then TOXF) because sort
     # is stable.
     for kind, pat in patterns:
-        for m in pat.finditer(text):
+        for m in _email_finditer(text) if kind == "EMAIL" else pat.finditer(text):
             spans.append((m.start(), m.end(), kind))
     if fuzzy:
         # tolerance pass (opt-in): whitespace tokens within fuzzy_max_dist
@@ -517,28 +572,24 @@ def scrub_batch(texts: pd.Series, cfg: QCConfig, emit_spans: bool = False) -> pd
     n_tox = np.zeros(n, dtype=np.int64)
     span_col = [[] for _ in range(n)] if emit_spans else None
     patterns = _scrub_patterns(cfg)
-    flags = _scrub_candidates(pa.array(arr, type=pa.large_string()), patterns)
+    arr_pa = pa.array(arr, type=pa.large_string())
+    flags = _scrub_candidates(arr_pa, patterns)
     fuzzy = np.zeros(n, dtype=bool)
     if cfg.scrub_fuzzy:
-        # fuzzy candidacy via the factorized unique-token stream: the DP runs
-        # once per UNIQUE token (memoized), then fans out via codes — same
-        # cost model as compute_stats. Exact: str.split() and _TOKEN_RE cut
-        # the same tokens.
-        split = texts.str.split()
-        n_tok_f = np.fromiter(map(len, split), dtype=np.int64, count=n)
-        flat_f = pd.Series(list(chain.from_iterable(split)), dtype=object)
-        if len(flat_f):
-            codes_f, uniq_f = pd.factorize(flat_f, use_na_sentinel=False)
-            u_hit = np.fromiter(
-                (
-                    fuzzy_term_match(t.lower(), cfg.fuzzy_max_dist, cfg.fuzzy_min_identity)
-                    for t in uniq_f
-                ),
-                dtype=bool,
-                count=len(uniq_f),
-            )
-            doc_ids_f = np.repeat(np.arange(n), n_tok_f)
-            fuzzy = np.bincount(doc_ids_f, weights=u_hit[codes_f].astype(np.float64), minlength=n) > 0
+        # fuzzy candidacy via the unique-token stream of compute_stats: the
+        # DP runs once per UNIQUE token (memoized), then fans out via codes.
+        # Exact: str.split() and _TOKEN_RE cut the same tokens.
+        n_tok_f, codes_f, uniq_f = _tokens(arr_pa)
+        u_hit = np.fromiter(
+            (
+                fuzzy_term_match(t.lower(), cfg.fuzzy_max_dist, cfg.fuzzy_min_identity)
+                for t in uniq_f.to_pylist()
+            ),
+            dtype=bool,
+            count=len(uniq_f),
+        )
+        doc_ids_f = np.repeat(np.arange(n), n_tok_f)
+        fuzzy = np.bincount(doc_ids_f, weights=u_hit[codes_f].astype(np.float64), minlength=n) > 0
     for i in np.flatnonzero(flags.any(axis=1) | fuzzy):
         pats = tuple(patterns[k] for k in np.flatnonzero(flags[i]))
         s, p, t, spans = _scrub(arr[i], pats, fuzzy[i], cfg)

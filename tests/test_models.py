@@ -2,7 +2,9 @@
 
 import numpy as np
 
-from longqc_spark.models import HashedNgramLM, LangIdModel, SEED_TEXT, langid_model, ngram_lm
+from longqc_spark.models import HashedNgramLM, LangIdModel, SEED_TEXT, hash_tokens, langid_model, ngram_lm
+
+from reference import doc_score
 
 
 def test_langid_predicts_seed_languages():
@@ -34,18 +36,19 @@ def test_langid_batch_split_invariance():
 
 def test_lm_scores_seed_text_better_than_gibberish():
     lm = ngram_lm()
-    good, _ = lm.doc_score("the quick brown fox jumps over the lazy dog")
-    bad, _ = lm.doc_score("zqxv jkwpf mbrtg hylnd vvkzq aaabz qqqrx")
+    good, _ = doc_score(lm, "the quick brown fox jumps over the lazy dog")
+    bad, _ = doc_score(lm, "zqxv jkwpf mbrtg hylnd vvkzq aaabz qqqrx")
     assert good > bad
 
 
 def test_lm_empty_doc():
     lm = ngram_lm()
-    lp, frac = lm.doc_score("")
+    lp, frac = doc_score(lm, "")
     assert lp == -20.0 and frac == 0.0
 
 
 def test_lm_deterministic():
     a, b = HashedNgramLM(), HashedNgramLM()
-    toks = "the people walk to the market".split()
-    assert np.array_equal(a.token_logprobs(toks), b.token_logprobs(toks))
+    hashes = hash_tokens(np.array("the people walk to the market".split(), dtype=object))
+    pos = np.arange(hashes.size)
+    assert np.array_equal(a.token_logprobs_flat(hashes, pos), b.token_logprobs_flat(hashes, pos))

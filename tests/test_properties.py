@@ -8,12 +8,12 @@ from hypothesis import given, settings, strategies as st
 
 from longqc_spark.config import DEFAULT_CONFIG
 from longqc_spark.kernels import (
-    _dup_line_frac,
-    _top_ngram_frac,
     compute_stats,
     scrub_batch,
     scrub_text,
 )
+
+from reference import top_ngram_frac
 
 texts = st.lists(
     st.text(
@@ -87,7 +87,7 @@ def test_top_ngram_flat_matches_reference(tokens):
     s = compute_stats(pd.Series([text], dtype=object))
     low = [t.lower() for t in text.split()]
     for n, col in ((2, "top_ngram_frac_2"), (3, "top_ngram_frac_3")):
-        assert abs(s[col].iloc[0] - _top_ngram_frac(low, n)) < 1e-12
+        assert abs(s[col].iloc[0] - top_ngram_frac(low, n)) < 1e-12
 
 
 def test_edge_cases_through_spark_pipeline(spark):
