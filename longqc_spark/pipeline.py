@@ -197,8 +197,11 @@ def _sql_literal(v) -> str:
 _SQL_FAILS = {
     operator.lt: lambda c, v: f"{c} < {_sql_literal(v)}",
     operator.gt: lambda c, v: f"{c} > {_sql_literal(v)}",
-    # ~isin([]) is true, null included; SQL has no empty IN list
-    _not_in: lambda c, v: f"NOT ({c} IN ({', '.join(map(_sql_literal, v))}))" if v else "true",
+    # ~isin is true on null, and on everything for an empty list (SQL has
+    # no empty IN list); a bare NOT IN is null on a null value
+    _not_in: lambda c, v: (
+        f"({c} IS NULL OR NOT ({c} IN ({', '.join(map(_sql_literal, v))})))" if v else "true"
+    ),
 }
 
 

@@ -3,22 +3,25 @@ cascade → JSON (+ optional HTML).
 
 Transplants LongQC's aggregate/model/decision/report phases (reference
 ``longQC.py:449-517`` aggregates, ``462-686`` JSON dict, ``787-824`` warn/
-error cascade, ``826-831`` jinja2 HTML). All heavy computation is ONE Spark
-aggregation pass + three ≤100-row collected histograms; fits run on
-sufficient statistics or a bounded hash-priority sample — nothing large ever
-reaches the driver.
+error cascade, ``826-831`` jinja2 HTML). ``summarize`` reads the labels in
+three queries (≤ 5 Spark jobs): one totals aggregation, one count table of
+per-doc ``(k, v)`` tags (reasons, langs, perplexity bins and exact lengths;
+the length histogram and N50/N90 are built from it on the driver) and one
+bounded hash-ordered perplexity sample. Fits run on sufficient statistics
+or that sample; no result larger than one row per distinct length reaches
+the driver.
 """
 
 from __future__ import annotations
 
 import json
+import math
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
 from .config import DEFAULT_CONFIG, QCConfig
 from .fits import gamma_mle, gmm_1d
-from .operators.relational import histogram, n50_approx
 
 # decision thresholds — the Q7-fraction warn/error analog
 # (reference longQC.py:141-143: warn 0.65 / error 0.5)
@@ -27,8 +30,36 @@ KEEP_RATE_ERROR = 0.25
 PII_RATE_WARN = 0.3
 LANG_MISMATCH_WARN = 0.3
 
+# perplexities in the GMM fit's hash-ordered sample
+GMM_SAMPLE_N = 10_000
 
-def summarize(labels: DataFrame, cfg: QCConfig = DEFAULT_CONFIG, sample_n: int = 10_000) -> dict[str, Any]:
+# per-doc (k, v) tags, one groupBy counts them all: one ``reason`` per failed
+# rule, the ``lang``, the ``ppl`` bin (floor(perplexity / 500), only below
+# 20000) and the exact ``words`` length
+_TAGS_SQL = """concat(
+  transform(reasons, r -> named_struct('k', 'reason', 'v', r)),
+  array(named_struct('k', 'lang', 'v', lang_pred),
+        named_struct('k', 'words', 'v', CAST(n_words AS STRING))),
+  IF(perplexity < 20000,
+     array(named_struct('k', 'ppl', 'v', CAST(floor(perplexity / 500.0) AS STRING))),
+     array()))"""
+
+
+def _nxx(lengths: list[tuple[int, int]], frac: float) -> int | None:
+    """N50-style weighted quantile (reference ``lq_utils.py:33-53``) of an
+    exact ``(length, count)`` table in descending length order: the first
+    length whose running ``length * count`` reaches ``frac * total``, as in
+    ``operators.relational.nxx``. None for an empty table."""
+    total = float(sum(w * n for w, n in lengths))
+    run = 0
+    for w, n in lengths:
+        run += w * n
+        if run >= frac * total:
+            return w
+    return None
+
+
+def summarize(labels: DataFrame, cfg: QCConfig = DEFAULT_CONFIG) -> dict[str, Any]:
     """labels (qc_pipeline output) → nested summary dict (JSON-ready)."""
     agg = labels.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -53,34 +84,20 @@ def summarize(labels: DataFrame, cfg: QCConfig = DEFAULT_CONFIG, sample_n: int =
     n_docs = agg["n_docs"] or 0
     n_keep = agg["n_keep"] or 0
 
-    # reasons histogram (A14 adapter-count-histogram analog)
-    reasons = {
-        r["reason"]: r["n"]
-        for r in labels.select(F.explode("reasons").alias("reason"))
-        .groupBy("reason")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    # binned tables ARE the report payload (A11)
-    len_hist = {
-        int(r["bin"]): r["n"] for r in histogram(labels, "n_words", 50.0).collect()
-    }
-    ppl_hist = {
-        int(r["bin"]): r["n"]
-        for r in histogram(labels.filter(F.col("perplexity") < 20000), "perplexity", 500.0).collect()
-    }
-    lang_counts = {
-        r["lang_pred"]: r["n"]
-        for r in labels.groupBy("lang_pred").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    # NXX via the bucketed two-pass (property-tested equal to the exact
-    # window nxx): the summary is computed over the FULL labels table, so
-    # the scale-safe path — no single-task global-sort window — is the one
-    # production uses
-    n50_rows = {
-        int(r["pct"]): r["nxx"]
-        for r in n50_approx(labels, "n_words", [0.5, 0.9]).collect()
-    }
+    # every other count comes from one groupBy over per-doc (k, v) tags:
+    # the reasons histogram (A14 adapter-count-histogram analog), the langs,
+    # the perplexity bins and the exact length table; the binned tables ARE
+    # the report payload (A11)
+    counts: dict[str, dict] = {"reason": {}, "lang": {}, "ppl": {}, "words": {}}
+    for r in labels.select(F.inline(F.expr(_TAGS_SQL))).groupBy("k", "v").count().collect():
+        counts[r["k"]][r["v"]] = r["count"]
+    reasons, lang_counts = counts["reason"], counts["lang"]
+    ppl_hist = {int(v): n for v, n in counts["ppl"].items()}
+    words = sorted(((int(v), n) for v, n in counts["words"].items()), reverse=True)
+    len_hist: dict[int, int] = {}
+    for w, n in words:
+        b = math.floor(w / 50.0)
+        len_hist[b] = len_hist.get(b, 0) + n
 
     # fits: gamma from sufficient stats (MF1); GMM on a bounded deterministic
     # sample of perplexities (MF2) — SA1-replacement sampling
@@ -91,7 +108,7 @@ def summarize(labels: DataFrame, cfg: QCConfig = DEFAULT_CONFIG, sample_n: int =
         r["perplexity"]
         for r in labels.select("perplexity")
         .orderBy(F.xxhash64("perplexity", F.lit(13)))
-        .limit(sample_n)
+        .limit(GMM_SAMPLE_N)
         .collect()
     ]
     gmm = gmm_1d(ppl_sample, k=2) if len(ppl_sample) >= 10 else []
@@ -121,8 +138,8 @@ def summarize(labels: DataFrame, cfg: QCConfig = DEFAULT_CONFIG, sample_n: int =
             "total_words": agg["total_words"],
             "longest_doc_words": agg["longest_doc_words"],
             "mean_words": agg["mean_words"],
-            "n50_words": n50_rows.get(50),
-            "n90_words": n50_rows.get(90),
+            "n50_words": _nxx(words, 0.5),
+            "n90_words": _nxx(words, 0.9),
         },
         "quality": {
             "mean_word_len": agg["mean_word_len"],

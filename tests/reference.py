@@ -11,6 +11,10 @@
   regexes on every unique token). They take and return what
   ``kernels._tokens`` and ``kernels._unique_token_stats`` do, so a test can
   swap them in and compare the two front ends through the whole kernel.
+* ``line_stats``: one doc's line stats as ``kernels._flat_line_stats``
+  computes them for a whole batch.
+* ``summarize``: ``report.summarize`` as seven separate label queries, the
+  shape it had before it read every count from one tagged count table.
 """
 
 from __future__ import annotations
@@ -18,11 +22,15 @@ from __future__ import annotations
 import math
 from collections import Counter
 from itertools import chain
+from typing import Any
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark.sql import DataFrame, functions as F
 
+from longqc_spark.config import DEFAULT_CONFIG, QCConfig
+from longqc_spark.fits import gamma_mle, gmm_1d
 from longqc_spark.kernels import _NOT_ALPHA_RE, _SYMBOL_RE
 from longqc_spark.models import (
     _BACKOFF,
@@ -31,6 +39,13 @@ from longqc_spark.models import (
     HashedNgramLM,
     hash_tokens,
     ngram_keys_all,
+)
+from longqc_spark.operators.relational import histogram, n50_approx
+from longqc_spark.report import (
+    KEEP_RATE_ERROR,
+    KEEP_RATE_WARN,
+    LANG_MISMATCH_WARN,
+    PII_RATE_WARN,
 )
 
 
@@ -49,10 +64,7 @@ def top_ngram_frac(tokens: list[str], n: int) -> float:
 
 def dup_line_frac(text: str) -> float:
     """Fraction of non-empty lines that are repeats of an earlier line."""
-    lines = [ln for ln in (s.strip() for s in text.split("\n")) if ln]
-    if len(lines) <= 1:
-        return 0.0
-    return 1.0 - len(set(lines)) / len(lines)
+    return line_stats(text)[0]
 
 
 def tokens(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, pa.Array]:
@@ -112,3 +124,139 @@ def doc_score(lm: HashedNgramLM, text: str, q_threshold: float = -8.0) -> tuple[
     if lps.size == 0:
         return -20.0, 0.0
     return float(lps.mean()), float((lps > q_threshold).mean())
+
+
+def line_stats(text: str) -> tuple[float, float, float, int]:
+    """One doc's ``(dup_line_frac, bullet_line_frac, ellipsis_line_frac,
+    n_segments)``: the stats run over the doc's non-empty newline-split
+    lines after ``str.strip()``; ``n_segments`` counts every split segment."""
+    segments = text.split("\n")
+    lines = [ln for ln in (s.strip() for s in segments) if ln]
+    total = len(lines)
+    dup = 1.0 - len(set(lines)) / total if total > 1 else 0.0
+    bullet = sum(ln[0] in "•-*" for ln in lines) / max(total, 1)
+    ellipsis = sum(ln.endswith(("...", "…")) for ln in lines) / max(total, 1)
+    return dup, bullet, ellipsis, len(segments)
+
+
+def summarize(labels: DataFrame, cfg: QCConfig = DEFAULT_CONFIG, sample_n: int = 10_000) -> dict[str, Any]:
+    """``report.summarize`` as it was before it moved to one tagged count
+    table: seven label queries (totals, reasons explode, two ``histogram``
+    calls, a lang ``groupBy``, the two-pass ``n50_approx``, the GMM sample)."""
+    agg = labels.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.count_if(F.col("keep")).alias("n_keep"),
+        F.sum("n_chars").alias("total_chars"),
+        F.sum("n_words").alias("total_words"),
+        F.max("n_words").alias("longest_doc_words"),
+        F.avg("n_words").alias("mean_words"),
+        F.avg("mean_word_len").alias("mean_word_len"),
+        F.avg("symbol_char_frac").alias("mean_symbol_frac"),
+        F.avg("dup_line_frac").alias("mean_dup_line_frac"),
+        F.avg("perplexity").alias("mean_perplexity"),
+        F.expr("percentile(perplexity, 0.5)").alias("median_perplexity"),
+        F.sum("pii_match_count").alias("total_pii_matches"),
+        F.count_if(F.col("pii_match_count") > 0).alias("n_docs_with_pii"),
+        F.sum("tox_match_count").alias("total_tox_matches"),
+        # sufficient stats for the gamma fit (Minka needs mean + mean-log)
+        F.avg(F.when(F.col("n_words") > 0, F.col("n_words"))).alias("len_mean"),
+        F.avg(F.when(F.col("n_words") > 0, F.log("n_words"))).alias("len_meanlog"),
+    ).collect()[0]
+
+    n_docs = agg["n_docs"] or 0
+    n_keep = agg["n_keep"] or 0
+
+    # reasons histogram (A14 adapter-count-histogram analog)
+    reasons = {
+        r["reason"]: r["n"]
+        for r in labels.select(F.explode("reasons").alias("reason"))
+        .groupBy("reason")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    # binned tables ARE the report payload (A11)
+    len_hist = {
+        int(r["bin"]): r["n"] for r in histogram(labels, "n_words", 50.0).collect()
+    }
+    ppl_hist = {
+        int(r["bin"]): r["n"]
+        for r in histogram(labels.filter(F.col("perplexity") < 20000), "perplexity", 500.0).collect()
+    }
+    lang_counts = {
+        r["lang_pred"]: r["n"]
+        for r in labels.groupBy("lang_pred").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    # NXX via the bucketed two-pass (property-tested equal to the exact
+    # window nxx): the summary is computed over the FULL labels table, so
+    # the scale-safe path — no single-task global-sort window — is the one
+    # production uses
+    n50_rows = {
+        int(r["pct"]): r["nxx"]
+        for r in n50_approx(labels, "n_words", [0.5, 0.9]).collect()
+    }
+
+    # fits: gamma from sufficient stats (MF1); GMM on a bounded deterministic
+    # sample of perplexities (MF2) — SA1-replacement sampling
+    gamma_shape, gamma_scale = (
+        gamma_mle(agg["len_mean"], agg["len_meanlog"]) if agg["len_mean"] else (0.0, 0.0)
+    )
+    ppl_sample = [
+        r["perplexity"]
+        for r in labels.select("perplexity")
+        .orderBy(F.xxhash64("perplexity", F.lit(13)))
+        .limit(sample_n)
+        .collect()
+    ]
+    gmm = gmm_1d(ppl_sample, k=2) if len(ppl_sample) >= 10 else []
+
+    keep_rate = n_keep / n_docs if n_docs else 0.0
+    pii_rate = (agg["n_docs_with_pii"] or 0) / n_docs if n_docs else 0.0
+    lang_ok = sum(v for k, v in lang_counts.items() if k in cfg.allowed_langs)
+    lang_mismatch = 1.0 - lang_ok / n_docs if n_docs else 0.0
+
+    warnings: dict[str, str] = {}
+    errors: dict[str, str] = {}
+    if keep_rate < KEEP_RATE_ERROR:
+        errors["low_keep_rate"] = f"keep rate {keep_rate:.3f} < {KEEP_RATE_ERROR}"
+    elif keep_rate < KEEP_RATE_WARN:
+        warnings["low_keep_rate"] = f"keep rate {keep_rate:.3f} < {KEEP_RATE_WARN}"
+    if pii_rate > PII_RATE_WARN:
+        warnings["high_pii_rate"] = f"{pii_rate:.3f} of docs carried PII"
+    if lang_mismatch > LANG_MISMATCH_WARN:
+        warnings["high_lang_mismatch"] = f"{lang_mismatch:.3f} docs outside {cfg.allowed_langs}"
+
+    return {
+        "totals": {
+            "n_docs": n_docs,
+            "n_keep": n_keep,
+            "keep_rate": keep_rate,
+            "total_chars": agg["total_chars"],
+            "total_words": agg["total_words"],
+            "longest_doc_words": agg["longest_doc_words"],
+            "mean_words": agg["mean_words"],
+            "n50_words": n50_rows.get(50),
+            "n90_words": n50_rows.get(90),
+        },
+        "quality": {
+            "mean_word_len": agg["mean_word_len"],
+            "mean_symbol_frac": agg["mean_symbol_frac"],
+            "mean_dup_line_frac": agg["mean_dup_line_frac"],
+            "mean_perplexity": agg["mean_perplexity"],
+            "median_perplexity": agg["median_perplexity"],
+        },
+        "scrub": {
+            "total_pii_matches": agg["total_pii_matches"],
+            "n_docs_with_pii": agg["n_docs_with_pii"],
+            "pii_rate": pii_rate,
+            "total_tox_matches": agg["total_tox_matches"],
+        },
+        "langs": lang_counts,
+        "reasons": reasons,
+        "histograms": {"n_words_b50": len_hist, "perplexity_b500": ppl_hist},
+        "fits": {
+            "gamma_length": {"shape": gamma_shape, "scale": gamma_scale},
+            "gmm_perplexity": gmm,
+        },
+        "warnings": warnings,
+        "errors": errors,
+    }

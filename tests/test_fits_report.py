@@ -74,8 +74,8 @@ def test_summarize_report(spark, corpus_path, tmp_path):
     assert s["totals"]["n_docs"] == 1000
     assert 0 < s["totals"]["keep_rate"] < 1
     assert s["totals"]["n50_words"] > 0
-    # the summary's NXX runs through the bucketed two-pass n50_approx (no
-    # single-task global-sort window anywhere in the production report
+    # the summary's NXX walks the exact per-length count table on the driver
+    # (no single-task global-sort window anywhere in the production report
     # path); values must equal the exact window nxx
     from longqc_spark.operators.relational import nxx
 

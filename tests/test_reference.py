@@ -5,7 +5,8 @@
 ``tests/reference.py`` holds the ``str.split`` / ``pd.factorize`` /
 per-token regex front end they replaced. The code-point checks cover every
 code point; the property test runs the whole kernel on each front end and
-compares the outputs bit for bit.
+compares the outputs bit for bit. ``kernels._flat_line_stats`` is compared
+the same way with ``reference.line_stats``, one doc at a time.
 """
 
 import string
@@ -20,7 +21,7 @@ from hypothesis import given, settings, strategies as st
 
 import reference
 from longqc_spark import kernels
-from longqc_spark.kernels import _tokens, _unique_token_stats, compute_stats
+from longqc_spark.kernels import _flat_line_stats, _tokens, _unique_token_stats, compute_stats
 from longqc_spark.models import HashedNgramLM, hash_tokens
 
 
@@ -89,6 +90,20 @@ def test_compute_stats_equals_the_per_token_oracle(docs):
         mp.setattr(kernels, "_unique_token_stats", reference.unique_token_stats)
         want = compute_stats(texts)
     pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+# line breaks, the Unicode separators that str.splitlines would also break
+# on but "\n"-splitting must not, and the bullet and ellipsis marks
+_LINE_ALPHABET = "ab \n\r\u2028\x85•-*.…"
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.text(alphabet=_LINE_ALPHABET, max_size=40), min_size=1, max_size=10))
+def test_flat_line_stats_equal_the_per_doc_spec(docs):
+    got = _flat_line_stats(pa.array(docs, type=pa.large_string()))
+    want = [reference.line_stats(d) for d in docs]
+    for g, w in zip(got, zip(*want)):
+        np.testing.assert_array_equal(g, np.asarray(w, dtype=g.dtype))
 
 
 @pytest.fixture(scope="module")

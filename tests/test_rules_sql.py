@@ -1,8 +1,8 @@
 """The Spark rule stage's SQL text (``pipeline.reasons_sql``) on thresholds
 the shipped presets do not use: an empty language list, a quote in a
 language code, infinite and tiny float thresholds and an int beyond 32
-bits. ``with_labels`` must agree with the pandas evaluator,
-``config.rule_failures``, on each."""
+bits, and on a null ``lang_pred``. ``with_labels`` must agree with the
+pandas evaluator, ``config.rule_failures``, on each."""
 
 import math
 
@@ -25,6 +25,7 @@ ROWS = [
     ROW,
     {**ROW, "lang_pred": "o'x", "perplexity": 1e308},
     {**ROW, "lang_pred": "de", "n_words": 2**40 + 1, "lang_score": 1e-320},
+    {**ROW, "lang_pred": None},
 ]
 
 CONFIGS = [
