@@ -199,8 +199,16 @@ def _tokens(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, pa.Array]:
     ``utf8_split_whitespace`` splits on exactly the ``str.isspace`` set
     (tests/test_reference.py checks every code point) but, unlike
     ``str.split()``, emits an empty token for leading or trailing whitespace
-    and for an empty doc; those are dropped and ``n_tok`` is counted after."""
-    parts = pc.utf8_split_whitespace(arr)
+    and for an empty doc; those are dropped and ``n_tok`` is counted after.
+
+    It also decodes one code point past a doc's trailing whitespace (pyarrow
+    16.1). After the last doc that byte is the data buffer's padding, and
+    when it is not valid UTF-8 the whitespace stays glued to the last token
+    (``".\\n"`` for ``"."``, changing that doc's stats from run to run). A
+    one-space sentinel doc, dropped from the result, makes that byte a
+    space."""
+    sentinel = pa.array([" "], type=arr.type)
+    parts = pc.utf8_split_whitespace(pa.concat_arrays([arr, sentinel]))[: len(arr)]
     flat = parts.flatten()
     keep = pc.greater(pc.binary_length(flat), 0).to_numpy(zero_copy_only=False)
     per_doc = pc.list_value_length(parts).to_numpy()

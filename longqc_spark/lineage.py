@@ -33,7 +33,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F, types as T
 
 from .config import DEFAULT_CONFIG, QCConfig
 from .pipeline import LABEL_SCHEMA_VERSION, qc_pipeline
@@ -286,6 +286,12 @@ def run_qc_with_lineage(
         labels = qc_pipeline(
             part, cfg, text_col=text_col, key_cols=[key_col], html_col=html_col
         )
+        # the committed table's schema, as a read infers it (the bucket
+        # partition column as an int): read_labels passes it to the reader,
+        # which then needs no Spark job to read a parquet footer
+        manifest["labels_schema"] = T.StructType(
+            labels.schema.fields + [T.StructField("bucket", T.IntegerType())]
+        ).jsonValue()
         staging = os.path.join(out_dir, root, f".staging-{uuid.uuid4().hex[:8]}")
         # With an exclusion observation attached, AQE's empty-relation
         # propagation must be excluded for this one write: when the WHOLE
@@ -501,13 +507,22 @@ def audit_table(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, schema=schema)
 
 
+def _labels_reader(spark: SparkSession, manifest: dict):
+    """A reader with the schema the manifest stored at commit time; a
+    manifest written before schemas were stored keeps inference (one Spark
+    job reading a parquet footer)."""
+    schema = manifest.get("labels_schema")
+    return spark.read.schema(T.StructType.fromJson(schema)) if schema else spark.read
+
+
 def read_labels(spark: SparkSession, out_dir: str, as_of: int | None = None) -> DataFrame:
     """Read the committed labels; ``as_of`` time-travels to snapshot version N
     (reads exactly the buckets committed in ``manifest-v{N}.json`` — reader
     isolation: buckets committed later are invisible)."""
     if as_of is None:
-        root = load_manifest(out_dir).get("data_root", "data")
-        return spark.read.parquet(os.path.join(out_dir, root))
+        m = load_manifest(out_dir)
+        root = m.get("data_root", "data")
+        return _labels_reader(spark, m).parquet(os.path.join(out_dir, root))
     vpath = os.path.join(out_dir, f"manifest-v{as_of}.json")
     with open(vpath) as f:
         m = json.load(f)
@@ -519,7 +534,9 @@ def read_labels(spark: SparkSession, out_dir: str, as_of: int | None = None) -> 
         raise ValueError(f"snapshot v{as_of} has no committed buckets")
     # basePath keeps the bucket partition column in time-travel reads, so
     # as_of and current reads have IDENTICAL schemas
-    return spark.read.option("basePath", os.path.join(out_dir, root)).parquet(*paths)
+    return (
+        _labels_reader(spark, m).option("basePath", os.path.join(out_dir, root)).parquet(*paths)
+    )
 
 
 def write_digest_index(

@@ -4,12 +4,13 @@ LongQC's five phases (chunked scan → per-record stat vectors → threshold
 keep/drop → record rewriting → summary reports; reference ``longQC.py:299-360,
 369-418, 787-824``) re-expressed Spark-first:
 
-    scan → salted url-hash repartition → ONE ``mapInPandas`` pass producing
-    the full stat vector + scrubbed text (Arrow-batched; per-row Python only
-    in ``scrub_text`` on prefilter-flagged docs, in ``str.lower`` and the
-    char-class regexes on unique non-ASCII tokens and in the token hash, see
-    kernels.py) → keep/drop + reasons as one SQL expression (JVM/codegen
-    side) → labels DataFrame → summary aggs (report.py).
+    scan → merged or salted splits, one task per core → ONE ``mapInPandas``
+    pass producing the full stat vector + scrubbed text (Arrow-batched;
+    per-row Python only in ``scrub_text`` on prefilter-flagged docs, in
+    ``str.lower`` and the char-class regexes on unique non-ASCII tokens and
+    in the token hash, see kernels.py) → keep/drop + reasons as one SQL
+    expression (JVM/codegen side) → labels DataFrame → summary aggs
+    (report.py).
 
 Why one ``mapInPandas`` for stats+scrub: text is the wide column; decoding it
 through Arrow once and computing every per-doc number in that single pass is
@@ -232,6 +233,28 @@ def with_labels(stats_df: DataFrame, cfg: QCConfig = DEFAULT_CONFIG) -> DataFram
 # ---------------------------------------------------------------------------
 
 
+def python_stage_partitions(df: DataFrame) -> int:
+    """Task count for the Python stage over ``df``:
+    ``max(defaultParallelism, ceil(est_bytes / spark.sql.files.maxPartitionBytes))``,
+    i.e. one task per core unless the input outgrows one split per core.
+
+    ``est_bytes`` is the optimizer's size estimate of ``df``
+    (``optimizedPlan().stats().sizeInBytes``): pure analysis, it never
+    executes the input. Each Python task pays ~30 ms of fixed time around
+    its UDF on a 4-core host (~10 ms from launch to the UDF's first batch,
+    ~20 ms draining its last batch through the rules and the partial
+    aggregate), more than the kernels take on a split of a few hundred
+    short docs; fewer, larger tasks pay it less often. Returns 0 when Spark
+    cannot size the input (it then reports ``spark.sql.defaultSizeInBytes``):
+    keep the layout as it is."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if est >= conf.defaultSizeInBytes():
+        return 0
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return max(cores, -(-est // conf.filesMaxPartitionBytes()))
+
+
 def qc_pipeline(
     docs: DataFrame,
     cfg: QCConfig = DEFAULT_CONFIG,
@@ -252,11 +275,19 @@ def qc_pipeline(
     anti-joined on it without re-reading run-1 input (the cross-chunk
     exclude-list analog, reference ``longQC.py:376-389``).
 
-    The up-front salted repartition serves two purposes: skew-proof uniform
-    task sizing for the Arrow UDF stage, and — in this sandbox, where parquet
-    fixtures are single-row-group and therefore 1-task scans — it IS the
-    parallelism source. On a production Iceberg table with properly sized
-    files, pass ``num_partitions=0`` to skip it and let the scan parallelize.
+    Task layout of the Python stage (``num_partitions``):
+
+    * ``0``: no shuffle. The scan's splits are merged with ``coalesce`` to
+      ``python_stage_partitions(docs)`` tasks (one per core for an input of
+      up to one ``maxPartitionBytes`` split per core), so many tiny splits
+      do not each pay a task's fixed cost. A no-op when the scan already
+      has that many splits or fewer, or when the input's size is unknown.
+    * ``None`` (default): the same when the source scan already yields at
+      least one split per core; otherwise (an under-split source, or a plan
+      with an exchange) a salted url-hash repartition to
+      ``python_stage_partitions(docs)`` tasks, the skew-proof uniform
+      layout.
+    * a positive count: a salted repartition to exactly that many tasks.
     """
     if num_partitions is None:
         # adaptive default (optimization round 6, guide §2.4: remove
@@ -265,8 +296,7 @@ def qc_pipeline(
         # the 4k-row-group CC corpus under 16 MB splits — the salted
         # repartition is a pure extra exchange of the full text column and
         # is skipped; an under-split source (single-row-group fixture
-        # files, one giant gzip) still gets the 2×cores salt. Callers keep
-        # explicit control via num_partitions=0 / a positive count.
+        # files, one giant gzip) still gets the salt.
         p = docs.sparkSession.sparkContext.defaultParallelism
         # CAUTION: probing partitioning (df.rdd) — or even asking for the
         # physical plan — of a query that contains exchange-producing
@@ -285,12 +315,15 @@ def qc_pipeline(
         scan_shaped = not any(
             ln.lstrip(" +-:").startswith(exchange_nodes) for ln in lp.splitlines()
         )
-        if scan_shaped and docs.rdd.getNumPartitions() >= p:
-            num_partitions = 0
-        else:
-            num_partitions = p * 2
+        if not (scan_shaped and docs.rdd.getNumPartitions() >= p):
+            # an input of unknown size is salted to two tasks per core
+            num_partitions = python_stage_partitions(docs) or 2 * p
     key = (key_cols or ["url"])[0]
-    parted = docs if num_partitions == 0 else salted_repartition(docs, key, num_partitions)
+    if num_partitions:
+        parted = salted_repartition(docs, key, num_partitions)
+    else:
+        n = python_stage_partitions(docs)
+        parted = docs.coalesce(n) if n else docs
     parted = parted.withColumn(
         "payload_md5", F.md5(F.col(html_col or text_col).cast("binary"))
     )

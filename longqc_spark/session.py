@@ -6,6 +6,11 @@ Local testing runs ``local[N]`` but every conf is chosen for the 1000-executor
 (DuckDB-oracle comparability), shuffle partitions sized to cores locally —
 on a real cluster AQE coalesces from a high initial number instead.
 
+The Python stage runs one task per core for small inputs
+(``pipeline.python_stage_partitions``) and each task feeds its UDF Arrow
+batches of at most 2048 records and 256 KB, so larger tasks do not mean
+larger batches or more worker memory.
+
 Python workers start through :mod:`longqc_spark.worker_daemon`
 (``spark.python.daemon.module``). Each scan chunk is one task, and for every
 task the stock daemon's reused worker re-read the central directory of each
@@ -57,6 +62,15 @@ def get_spark(app: str = "longqc-spark", cores: int | None = None) -> SparkSessi
         # better task granularity + serialize/compute overlap for wide text
         # columns crossing the Arrow boundary
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        # and at most 256 KB of input per batch (whichever limit comes
+        # first): the kernels' working set is ~40 KB per 1 KB doc (token
+        # hashes, n-gram keys, LM gathers), so a record cap alone lets
+        # batch memory grow with doc size and with the larger tasks
+        # qc_pipeline builds. On a 4-core host, merging perfbench qc_text's
+        # 16 splits into 4 tasks took worker RSS from 637 to 835 MB
+        # without this cap and to 614 MB with it; 512 KB cost qc_short
+        # +3.6 % RSS over 256 KB. A doc over the cap is a batch of one.
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(256 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # shuffle/spill codec: lz4 (stock) unless overridden — zstd trades

@@ -68,8 +68,9 @@ def stream_qc(
             if n_done >= fail_after_batches:
                 raise RuntimeError(f"injected failure before epoch {epoch_id}")
         # inside foreachBatch the micro-batch is a plain DataFrame: the exact
-        # batch qc_pipeline DAG runs per chunk (num_partitions=0 — a
-        # micro-batch is already small and file-partitioned)
+        # batch qc_pipeline DAG runs per chunk (num_partitions=0: no
+        # shuffle; a micro-batch is already small and file-partitioned, and
+        # its tiny file splits are merged into at most one task per core)
         labels = qc_pipeline(
             batch_df,
             cfg,

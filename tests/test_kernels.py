@@ -180,3 +180,21 @@ def test_line_shape_and_brace_stats():
     assert s.bullet_line_frac.tolist() == pytest.approx([2 / 3, 0.0, 0.0, 0.0])
     assert s.ellipsis_line_frac.tolist() == pytest.approx([0.0, 2 / 3, 0.0, 0.0])
     assert s.brace_char_count.tolist() == [0, 0, 2, 0]
+
+
+def test_tokens_ignore_the_byte_after_the_last_doc():
+    """``utf8_split_whitespace`` reads one byte past a doc's trailing
+    whitespace; an invalid byte there (buffer padding after the last doc)
+    must not glue the whitespace to the last token."""
+    import numpy as np
+    import pyarrow as pa
+
+    from longqc_spark.kernels import _tokens
+
+    for after in (b"\x80", b"\xff", b" ", b""):
+        offsets = pa.py_buffer(np.array([0, 2, 6], dtype=np.int64).tobytes())
+        data = pa.py_buffer(b"a\nx .\n" + after)
+        arr = pa.Array.from_buffers(pa.large_string(), 2, [None, offsets, data])
+        n_tok, codes, uniq = _tokens(arr)
+        assert n_tok.tolist() == [1, 2]
+        assert [uniq[int(c)].as_py() for c in codes] == ["a", "x", "."]

@@ -306,6 +306,52 @@ def test_time_travel_schema_matches_current(spark, docs, tmp_path):
     assert "bucket" in old.columns
 
 
+def _jobs(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted under a test-owned job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_labels_uses_the_stored_schema(spark, docs, tmp_path):
+    """The manifest stores the committed schema, so read_labels (current and
+    as_of) runs no Spark job and summarize over it stays within its five;
+    the schema is the one inference gives, and a manifest without a stored
+    schema still reads by inference."""
+    import json
+
+    from longqc_spark.report import summarize
+
+    out = str(tmp_path / "stored_schema")
+    run_qc_with_lineage(docs, out, n_buckets=2)
+    v = load_manifest(out)["version"]
+    inferred = spark.read.parquet(os.path.join(out, "data")).schema
+    for tag, read in (
+        ("current", lambda: read_labels(spark, out)),
+        ("as_of", lambda: read_labels(spark, out, as_of=v)),
+    ):
+        assert _jobs(spark, f"read_labels_{tag}", read) == 0
+        assert read().schema == inferred
+        assert 0 < _jobs(spark, f"summarize_{tag}", lambda: summarize(read())) <= 5
+    assert read_labels(spark, out).count() == docs.count()
+
+    for name in ("manifest.json", f"manifest-v{v}.json"):
+        path = os.path.join(out, name)
+        with open(path) as f:
+            m = json.load(f)
+        del m["labels_schema"]
+        with open(path, "w") as f:
+            json.dump(m, f)
+    assert read_labels(spark, out).schema == inferred
+    assert read_labels(spark, out, as_of=v).schema == inferred
+    assert read_labels(spark, out).count() == docs.count()
+
+
 def test_incremental_cross_run_dedup(spark, docs, tmp_path):
     """Run 2 (a re-crawl overlapping run 1) admits only genuinely new
     payloads: its batch is anti-joined against run 1's COMMITTED labels on

@@ -15,7 +15,7 @@ import reference
 from test_rules_sql import ROW
 
 from longqc_spark.pipeline import SCRUB_FIELDS, STATS_FIELDS, qc_pipeline, with_labels
-from longqc_spark.report import summarize
+from longqc_spark.report import summarize, write_json_report
 
 
 def _canon(x):
@@ -103,3 +103,16 @@ def test_summarize_runs_at_most_five_spark_jobs(spark, corpus_labels):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+
+
+def test_json_report_with_a_null_lang(spark, tmp_path):
+    """A null ``lang_pred`` beside real languages: the ``None`` key is
+    written as ``"null"``, as ``json`` writes it when it does not sort."""
+    summary = summarize(_labels(spark, _edge_rows()["null_lang"]))
+    assert None in summary["langs"] and len(summary["langs"]) > 1
+    path = tmp_path / "report.json"
+    write_json_report(summary, str(path))
+    got = json.loads(path.read_text())
+    assert got["langs"]["null"] == 2
+    unsorted = json.loads(json.dumps(summary, default=float))
+    assert json.dumps(got, sort_keys=True) == json.dumps(unsorted, sort_keys=True)
