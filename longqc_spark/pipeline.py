@@ -284,9 +284,9 @@ def qc_pipeline(
       has that many splits or fewer, or when the input's size is unknown.
     * ``None`` (default): the same when the source scan already yields at
       least one split per core; otherwise (an under-split source, or a plan
-      with an exchange) a salted url-hash repartition to
-      ``python_stage_partitions(docs)`` tasks, the skew-proof uniform
-      layout.
+      with an exchange) a salted url-hash repartition to two tasks per
+      core, the skew-proof uniform layout. The size estimate does not set
+      this count: for a join it is the product of the sides' sizes.
     * a positive count: a salted repartition to exactly that many tasks.
     """
     if num_partitions is None:
@@ -316,8 +316,7 @@ def qc_pipeline(
             ln.lstrip(" +-:").startswith(exchange_nodes) for ln in lp.splitlines()
         )
         if not (scan_shaped and docs.rdd.getNumPartitions() >= p):
-            # an input of unknown size is salted to two tasks per core
-            num_partitions = python_stage_partitions(docs) or 2 * p
+            num_partitions = 2 * p
     key = (key_cols or ["url"])[0]
     if num_partitions:
         parted = salted_repartition(docs, key, num_partitions)

@@ -232,21 +232,12 @@ def drift_report(
     ).orderBy(F.col("psi").desc(), "metric")
 
 
-def _json_keys(x):
-    """``x`` with every dict key as the string ``json`` writes for it
-    (``None`` -> ``"null"``), so ``sort_keys`` never compares a ``str`` with
-    ``None``: ``summarize`` keys a null ``lang_pred`` as ``None`` beside the
-    language codes."""
-    if isinstance(x, dict):
-        return {k if isinstance(k, str) else json.dumps(k): _json_keys(v) for k, v in x.items()}
-    if isinstance(x, list):
-        return [_json_keys(v) for v in x]
-    return x
-
-
 def write_json_report(summary: dict, path: str) -> None:
     with open(path, "w") as f:
-        json.dump(_json_keys(summary), f, indent=1, sort_keys=True, default=float)
+        # round-trip first: json writes a None key (a null lang_pred) as
+        # "null", and sort_keys then compares only strings
+        summary = json.loads(json.dumps(summary, default=float))
+        json.dump(summary, f, indent=1, sort_keys=True)
 
 
 _HTML_TPL = """<!doctype html><html><head><meta charset="utf-8">

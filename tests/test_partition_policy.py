@@ -124,3 +124,19 @@ def test_hostile_docs_run_through_stats_and_scrub(spark):
     pd.testing.assert_frame_equal(
         got.reset_index(drop=True), want[got.columns].reset_index(drop=True), check_dtype=False
     )
+
+
+def test_joined_input_is_salted_to_two_tasks_per_core(spark, tiny_files):
+    """A join's size estimate is the product of its sides' sizes, far above
+    the real input: the default's salt for a plan with an exchange stays
+    at two tasks per core instead of following that estimate."""
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        docs = spark.read.parquet(*tiny_files)
+        hosts = docs.select("url", F.length("url").alias("url_len"))
+        joined = docs.join(hosts, "url", "left")
+        cores = spark.sparkContext.defaultParallelism
+        assert python_stage_partitions(joined) > 2 * cores
+        assert _tasks(qc_pipeline(joined)) <= 2 * cores
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
